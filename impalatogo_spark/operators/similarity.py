@@ -340,25 +340,22 @@ def lsh_ann_topk(corpus: DataFrame, queries: DataFrame, n_dims: int, k: int = 5,
 # IVF (inverted-file) ANN: coarse k-means quantizer + per-cell posting lists
 # ---------------------------------------------------------------------------
 
-def ivf_index(corpus: DataFrame, n_cells: int = 16, seed: int = 42):
-    """Build an IVF index: k-means (MLlib, fixed seed -> deterministic)
-    assigns every vector to its nearest centroid cell. Returns
-    (assigned_corpus_df_with_cell, centroids_list).
+def ivf_index(corpus: DataFrame, n_cells: int = 16):
+    """Build an IVF index: the engine's integer k-means (kmeans_quantized,
+    3 rounds, deterministic) assigns every vector to its nearest centroid
+    cell. Returns (assigned_corpus_df_with_cell, centroids_list) with the
+    centroids as float vectors (integer centroid / scale) for
+    ivf_ann_topk's cosine probe ranking.
 
     Scale: the clustering pass is linear and one-off; the index is the
     (cell -> vectors) partitioning. At 100 TB persist the assigned corpus
     bucketed by cell."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    vecs = corpus.withColumn("features", array_to_vector("embedding"))
-    km = KMeans(k=n_cells, seed=seed, maxIter=20)
-    model = km.fit(vecs)
-    assigned = model.transform(vecs).withColumnRenamed("prediction", "cell").drop(
-        "features"
-    )
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
-    return assigned, centroids
+    scale = 1_000_000
+    assign, cents = kmeans_quantized(corpus, k=n_cells, iters=3, scale=scale,
+                                     return_state=True)
+    assigned = corpus.join(
+        assign.select("vec_id", F.col("cluster").alias("cell")), "vec_id")
+    return assigned, [[v / scale for v in vec] for _, vec in cents]
 
 
 def ivf_ann_topk(assigned: DataFrame, centroids: list, queries: DataFrame,
@@ -791,13 +788,83 @@ ORDER BY anchor_id, positive_id
 
 # -- integer-exact k-means clustering ---------------------------------------
 
+def _quantized(emb: DataFrame, scale: int = 1_000_000) -> DataFrame:
+    """(vec_id, qa): the shared single-multiply integer quantization."""
+    return emb.select(
+        "vec_id",
+        F.expr(f"transform(embedding, v -> CAST(floor(v * {scale}) AS BIGINT))")
+        .alias("qa"),
+    )
+
+
+def _dist2_sql(col: str, vec: list) -> str:
+    """Rendered SQL: the exact integer squared distance from the BIGINT
+    array `col` to a literal vector. One F.expr string parse per table —
+    building k*dim literals as individual F.lit() Columns costs one py4j
+    round-trip each (measured ~0.6 s per k-means round at k=4, dim=64)."""
+    lits = ", ".join(f"{v}L" for v in vec)
+    return (f"aggregate(zip_with({col}, array({lits}), "
+            "(a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), "
+            "(acc, x) -> acc + x)")
+
+
+def _dist2_choices(col: str, cents: list) -> str:
+    """Rendered SQL: array of named_struct(dist2, cluster), one per literal
+    centroid in `cents` ([(cid, vec)]). Field order (dist2, cluster) makes
+    array_min the argmin with cluster-id tie-break (== the oracles' ORDER BY
+    dist2, cluster) and array_sort the probe ranking."""
+    return "array(" + ", ".join(
+        f"named_struct('dist2', {_dist2_sql(col, vec)}, 'cluster', {cid})"
+        for cid, vec in cents) + ")"
+
+
+def _fold_books(rows) -> list:
+    """(cluster, dim, val) rows -> the [(cid, [val per dim])] centroid list,
+    cids ascending — the literal table every argmin above folds in."""
+    by_cluster: dict[int, dict[int, int]] = {}
+    for r in rows:
+        by_cluster.setdefault(r.cluster, {})[r.dim] = r.val
+    return [(cid, [dims[d] for d in range(len(dims))])
+            for cid, dims in sorted(by_cluster.items())]
+
+
 def kmeans_quantized(emb: DataFrame, k: int = 4, iters: int = 3,
                      scale: int = 1_000_000, return_state: bool = False):
     """Lloyd's k-means over embeddings in EXACT integer arithmetic, so a
-    DuckDB oracle can reproduce every assignment bit-for-bit (the clustering
-    twin of ivf_index, which is float/recall-tested only).
+    DuckDB oracle (kmeans_oracle) reproduces every assignment bit-for-bit.
+    The one-task case of kmeans_multi_quantized (full vector width); see
+    there for the determinism recipe and scale shape.
 
-    Determinism recipe (mirrored in kmeans_oracle):
+    Returns (vec_id, cluster, dist2); with return_state also the centroids
+    the FINAL assignment used (the c_{iters-1} table of the oracle) — what
+    an IVF probe needs."""
+    assign, books = kmeans_multi_quantized(
+        emb, [("cluster", k, iters, 0, None)], scale=scale)
+    out = assign.select("vec_id", "cluster",
+                        F.col("cluster_dist2").alias("dist2"))
+    if return_state:
+        return out, books["cluster"]
+    return out
+
+
+def kmeans_multi_quantized(emb: DataFrame, tasks: list,
+                           scale: int = 1_000_000):
+    """Independent exact-integer k-means trainings over (slices of) the
+    same quantized vectors, fused into one pass per round — the engine's
+    one k-means kernel (kmeans_quantized is its one-task case). Product
+    quantization trains m subspace codebooks plus a coarse quantizer for
+    IVF-PQ; fused, they share:
+
+      * ONE init collect — every task's init centroids are slices of the
+        first max(k) vec_ids' vectors (quantization is elementwise, so
+        slice-then-quantize == quantize-then-slice);
+      * ONE centroid-update job per round — each still-active task
+        contributes a (task, cluster, local-dim, val) branch (argmin
+        computed once per row behind the Generate barrier, then
+        posexplode of its slice) and one union-groupBy shuffles them all;
+      * ONE final projection computing every task's argmin.
+
+    Determinism recipe (mirrored per task by kmeans_cte_parts):
       * dims quantized to BIGINT via floor(v * scale) — one IEEE multiply,
         engine-identical;
       * init = the k smallest vec_ids' vectors, cluster ids 0..k-1;
@@ -809,169 +876,66 @@ def kmeans_quantized(emb: DataFrame, k: int = 4, iters: int = 3,
       * a cluster that loses all members disappears (both sides derive the
         next centroid set from the assignment groupBy).
 
-    Scale shape: assignment is a scan with a k*dim literal centroid table
-    folded into codegen (k*dim is bounded and tiny); the update shuffles
-    skinny (cluster, dim, partial-sum) rows with map-side combine — the
-    label_centroids pattern. Per-iteration driver collect is k*dim rows.
-    100 TB posture: iterations are O(iters) scans, no lineage growth (each
+    Scale shape: assignment is a scan with the k*dim literal centroid
+    table folded into codegen (bounded and tiny); the update shuffles
+    skinny (task, cluster, dim, partial-sum) rows with map-side combine.
+    Per-round driver collect is sum(k*dim) rows; no lineage growth (each
     round's centroids are literals, not a DataFrame chain).
-    """
-    q = emb.select(
-        "vec_id",
-        F.expr(f"transform(embedding, v -> CAST(floor(v * {scale}) AS BIGINT))")
-        .alias("qa"),
-    )
-    init = q.orderBy("vec_id").limit(k).collect()
-    cents: list[tuple[int, list[int]]] = [(i, list(r.qa)) for i, r in enumerate(init)]
-    assign = None
-    for it in range(iters):
-        # one F.expr over a rendered SQL string: building k*dim literals as
-        # individual F.lit() Columns costs one py4j round-trip each
-        # (measured ~0.6s per iteration at k=4, dim=64); a string parse is
-        # one call total. Struct field order (dist2, cluster) makes
-        # array_min the argmin with cluster-id tie-break.
-        choices = F.expr(
-            "array("
-            + ", ".join(
-                "named_struct('dist2', aggregate(zip_with(qa, "
-                f"array({', '.join(f'{v}L' for v in cvec)}), "
-                "(a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), "
-                f"(acc, x) -> acc + x), 'cluster', {cid})"
-                for cid, cvec in cents
-            )
-            + ")"
-        )
-        assign = q.select(
-            "vec_id", "qa", F.array_min(choices).alias("best")
-        ).select(
-            "vec_id", "qa",
-            F.col("best.cluster").alias("cluster"),
-            F.col("best.dist2").alias("dist2"),
-        )
-        if it == iters - 1:
-            break
-        sums = (
-            assign.select("cluster", F.posexplode("qa").alias("dim", "val"))
-            .groupBy("cluster", "dim")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("c"))
-            .select("cluster", "dim",
-                    F.expr("(s - pmod(s, c)) div c").alias("val"))
-        )
-        by_cluster: dict[int, dict[int, int]] = {}
-        for r in sums.collect():
-            by_cluster.setdefault(r.cluster, {})[r.dim] = r.val
-        cents = [
-            (cid, [dims[d] for d in range(len(dims))])
-            for cid, dims in sorted(by_cluster.items())
-        ]
-    out = assign.select("vec_id", "cluster", "dist2")
-    if return_state:
-        # cents here are the centroids the FINAL assignment used (the
-        # c_{iters-1} table of the oracle) — what an IVF probe needs
-        return out, cents
-    return out
-
-
-def _argmin_choices(cents: list, off: int, dsub: int) -> str:
-    """The exact-integer argmin SQL over slice(qa, off+1, dsub) against a
-    literal centroid table — kmeans_quantized's `choices` expression
-    generalized to a subrange (slice(qa, 1, len(qa)) IS qa, so offset 0 /
-    full width reproduces the original coarse expression value-for-value).
-    One rendered string per table: per-literal F.lit Columns cost a py4j
-    round-trip each (see kmeans_quantized)."""
-    sub = f"slice(qa, {off + 1}, {dsub})"
-    return (
-        "array(" + ", ".join(
-            f"named_struct('dist2', aggregate(zip_with({sub}, "
-            f"array({', '.join(f'{v}L' for v in cvec)}), "
-            "(a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), "
-            f"(acc, x) -> acc + x), 'cluster', {cid})"
-            for cid, cvec in cents
-        ) + ")"
-    )
-
-
-def kmeans_multi_quantized(emb: DataFrame, tasks: list,
-                           scale: int = 1_000_000):
-    """SEVERAL independent exact-integer k-means trainings over (slices of)
-    the same quantized vectors, fused into one pass per round (r08, guide
-    §1.2 "remove passes"): product quantization trains m independent
-    subspace codebooks (plus a coarse quantizer for IVF-PQ), and running
-    them as m+1 sequential kmeans_quantized calls pays m+1 init collects,
-    one centroid-update job per task per round, and an m-way join of the
-    final code assignments on vec_id. Fused:
-
-      * ONE init collect — every task's init centroids are slices of the
-        first max(k) vec_ids' vectors (quantization is elementwise, so
-        slice-then-quantize == quantize-then-slice);
-      * ONE centroid-update job per round — each still-active task
-        contributes a (task, cluster, local-dim, val) branch (argmin
-        computed once per row behind the Generate barrier, then
-        posexplode of its slice) and one union-groupBy shuffles them all;
-      * ONE final projection computing every task's argmin — the m-way
-        vec_id join disappears.
-
-    Arithmetic is kmeans_quantized's, term for term (same argmin structs,
-    same subtract-positive-mod floor division), so per-task results are
-    bit-identical — pinned by tests/test_similarity.py — and the DuckDB
-    oracles (kmeans_cte_parts per task) are unchanged.
 
     tasks: list of (name, k, iters, offset, dsub) — `name` becomes the
     task's cluster column (+ `{name}_dist2`), offset/dsub its 0-based
-    slice of the quantized vector. Returns (assign, books): one DataFrame
-    with vec_id + every task's final assignment, and {name: cents} in
-    kmeans_quantized's (cid, vec) list format."""
+    slice of the quantized vector (dsub None = to the end of the vector).
+    Names must be non-empty and unique. Returns (assign, books): one
+    DataFrame with vec_id + every task's final assignment, and
+    {name: [(cid, vec)]} — the centroids each final assignment used."""
+    names = [t[0] for t in tasks]
+    if not (names and all(names) and len(set(names)) == len(names)):
+        raise ValueError(
+            f"k-means task names must be non-empty and unique: {names}")
     q = _quantized(emb, scale)
     kmax = max(k for _, k, _, _, _ in tasks)
     init = q.orderBy("vec_id").limit(kmax).collect()
+    width = len(init[0].qa) if init else 0
+    tasks = [(name, k, iters, off, width - off if dsub is None else dsub)
+             for name, k, iters, off, dsub in tasks]
     books: dict[str, list] = {
         name: [(i, list(init[i].qa[off:off + dsub]))
                for i in range(min(k, len(init)))]
         for name, k, iters, off, dsub in tasks
     }
+    slices = {name: f"slice(qa, {off + 1}, {dsub})"
+              for name, _k, _it, off, dsub in tasks}
+
+    def best(name: str) -> Column:
+        return F.array_min(F.expr(_dist2_choices(slices[name], books[name])))
+
     n_updates = max(iters for _, _, iters, _, _ in tasks) - 1
     for u in range(n_updates):
         active = [t for t in tasks if t[2] - 1 > u]
-        branches = []
-        for tid, (name, _k, _it, off, dsub) in enumerate(active):
-            branches.append(
-                q.select(
-                    "qa",
-                    F.array_min(F.expr(_argmin_choices(books[name], off,
-                                                       dsub)))
-                    .getField("cluster").alias("cluster"),
-                ).select(
-                    F.lit(tid).alias("t"), "cluster",
-                    F.posexplode(F.expr(f"slice(qa, {off + 1}, {dsub})"))
-                    .alias("dim", "val"),
-                )
+        upd = None
+        for tid, (name, *_rest) in enumerate(active):
+            branch = q.select(
+                "qa", best(name).getField("cluster").alias("cluster"),
+            ).select(
+                F.lit(tid).alias("t"), "cluster",
+                F.posexplode(F.expr(slices[name])).alias("dim", "val"),
             )
-        upd = branches[0]
-        for b in branches[1:]:
-            upd = upd.unionAll(b)
+            upd = branch if upd is None else upd.unionAll(branch)
         sums = (
             upd.groupBy("t", "cluster", "dim")
             .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("c"))
             .select("t", "cluster", "dim",
                     F.expr("(s - pmod(s, c)) div c").alias("val"))
         )
-        by_task: dict[int, dict[int, dict[int, int]]] = {}
-        for r in sums.collect():
-            by_task.setdefault(r.t, {}).setdefault(r.cluster, {})[r.dim] = r.val
-        for tid, (name, _k, _it, _off, _dsub) in enumerate(active):
-            by_cluster = by_task.get(tid, {})
-            books[name] = [
-                (cid, [dims[d] for d in range(len(dims))])
-                for cid, dims in sorted(by_cluster.items())
-            ]
+        rows = sums.collect()
+        for tid, (name, *_rest) in enumerate(active):
+            books[name] = _fold_books(r for r in rows if r.t == tid)
     assign = q.select(
         "vec_id", "qa",
-        *[F.array_min(F.expr(_argmin_choices(books[name], off, dsub)))
-          .alias(f"__best_{name}")
-          for name, _k, _it, off, dsub in tasks],
+        *[best(name).alias(f"__best_{name}") for name in names],
     ).select(
         "vec_id",
-        *[c for name, _k, _it, _off, _dsub in tasks
+        *[c for name in names
           for c in (F.col(f"__best_{name}.cluster").alias(name),
                     F.col(f"__best_{name}.dist2").alias(f"{name}_dist2"))],
     )
@@ -1046,20 +1010,15 @@ def pq_codes(emb: DataFrame, m: int = 4, n_dims: int = 64, k: int = 4,
     codebook per subspace; a vector compresses to m small codes
     (here m*2 bits vs 64*8 bytes — the standard ANN memory-footprint
     trick) and its reconstruction error is the SUM of per-subspace
-    quantization errors. Reuses the exact-integer kmeans_quantized per
-    subspace, so every code and error is bit-deterministic and the DuckDB
-    oracle (kmeans_cte_parts per subspace) reproduces them exactly.
+    quantization errors. The m codebooks train as m tasks of the
+    exact-integer kmeans_multi_quantized, so every code and error is
+    bit-deterministic and the DuckDB oracle (kmeans_cte_parts per
+    subspace) reproduces them exactly.
 
-    Scale shape: per subspace, assignment is a scan with the k*(dim/m)
-    centroid table folded into codegen and the update shuffles skinny
-    (cluster, dim, partial-sum) rows; the m code columns then join on
-    vec_id — co-partitioned by the same key, one shuffle stage each at
-    cluster scale. Codebook training cost is m small kmeans runs over
-    sliced columns of ONE scan lineage, not m passes over wide rows."""
-    # fused m-subspace training (r08, §1.2): one init collect, one
-    # centroid-update job per round, codes + errors from ONE projection —
-    # see kmeans_multi_quantized. Bit-identical per subspace; the m-way
-    # vec_id join of the per-subspace assignments is gone.
+    Scale shape: one init collect, one centroid-update job per round for
+    all m subspaces, and codes + errors from ONE projection (see
+    kmeans_multi_quantized) — m sliced trainings over one scan lineage,
+    not m passes over wide rows."""
     dsub = n_dims // m
     out, _ = kmeans_multi_quantized(
         emb,
@@ -1180,21 +1139,24 @@ def ivf_exact_topk(emb: DataFrame, k_cells: int = 8, iters: int = 3,
     centroid table into codegen as literals; candidate generation is a hash
     join on cell id touching only probed cells (n_probe/k of the corpus);
     scoring is a scan-local integer fold + one TopK window per query."""
-    from pyspark.sql import Window as W
-
     assign, cents = kmeans_quantized(emb, k=k_cells, iters=iters,
                                      scale=scale, return_state=True)
     q = _quantized(emb, scale)
     return _ivf_probe_topk(q, assign, cents, n_queries, n_probe, topk)
 
 
-def _quantized(emb: DataFrame, scale: int = 1_000_000) -> DataFrame:
-    """(vec_id, qa): the shared single-multiply integer quantization."""
-    return emb.select(
-        "vec_id",
-        F.expr(f"transform(embedding, v -> CAST(floor(v * {scale}) AS BIGINT))")
-        .alias("qa"),
+def _ivf_probes(q: DataFrame, cents: list, n_queries: int, n_probe: int):
+    """The first n_queries vectors as IVF queries (q_id, qqa), and their
+    probes (q_id, qqa, cluster): the n_probe cells whose literal centroids
+    are nearest by exact integer distance, cluster-id tie-break."""
+    queries = q.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("q_id"), F.col("qa").alias("qqa")
     )
+    ranked = F.array_sort(F.expr(_dist2_choices("qqa", cents)))
+    probes = queries.select(
+        "q_id", "qqa", F.explode(F.slice(ranked, 1, n_probe)).alias("p"),
+    ).select("q_id", "qqa", F.col("p.cluster").alias("cluster"))
+    return queries, probes
 
 
 def _ivf_probe_topk(q: DataFrame, assign: DataFrame, cents: list,
@@ -1205,26 +1167,7 @@ def _ivf_probe_topk(q: DataFrame, assign: DataFrame, cents: list,
     exact BIGINT dot scoring, per-query TopN."""
     from pyspark.sql import Window as W
 
-    queries = q.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("qa").alias("qqa")
-    )
-    # single F.expr string for the k*dim probe table (see kmeans_quantized:
-    # per-literal F.lit construction costs a py4j round-trip each)
-    choices = F.expr(
-        "array("
-        + ", ".join(
-            "named_struct('d2', aggregate(zip_with(qqa, "
-            f"array({', '.join(f'{v}L' for v in cvec)}), "
-            "(a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), "
-            f"(acc, x) -> acc + x), 'cluster', {cid})"
-            for cid, cvec in cents
-        )
-        + ")"
-    )
-    probes = queries.select(
-        "q_id", "qqa",
-        F.explode(F.slice(F.array_sort(choices), 1, n_probe)).alias("p"),
-    ).select("q_id", "qqa", F.col("p.cluster").alias("cluster"))
+    _, probes = _ivf_probes(q, cents, n_queries, n_probe)
     cand = probes.join(assign.select("vec_id", "cluster"), "cluster").filter(
         F.col("vec_id") != F.col("q_id")
     )
@@ -1328,12 +1271,7 @@ def build_ivf_index(emb: DataFrame, index_dir: str, k_cells: int = 8,
 def load_ivf_centroids(spark, snapshot_dir: str) -> list:
     """Read the persisted centroid table back to the bounded k*dim literal
     list the probe/assign kernels fold into codegen."""
-    rows = spark.read.parquet(f"{snapshot_dir}/centroids").collect()
-    by_cluster: dict[int, dict[int, int]] = {}
-    for r in rows:
-        by_cluster.setdefault(r.cluster, {})[r.dim] = r.val
-    return [(cid, [dims[d] for d in range(len(dims))])
-            for cid, dims in sorted(by_cluster.items())]
+    return _fold_books(spark.read.parquet(f"{snapshot_dir}/centroids").collect())
 
 
 def load_ivf_assignments(spark, snapshot_dir: str) -> DataFrame:
@@ -1359,19 +1297,10 @@ def ivf_assign_batch(new_emb: DataFrame, cents: list,
     k*dim literal table, no re-clustering (the incremental path; identical
     argmin + cluster-id tie-break as the k-means assignment step, so the
     oracle mirrors it with the same ROW_NUMBER recipe)."""
-    q = _quantized(new_emb, scale)
-    choices = F.expr(
-        "array("
-        + ", ".join(
-            "named_struct('dist2', aggregate(zip_with(qa, "
-            f"array({', '.join(f'{v}L' for v in cvec)}), "
-            "(a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), "
-            f"(acc, x) -> acc + x), 'cluster', {cid})"
-            for cid, cvec in cents
-        )
-        + ")"
-    )
-    return q.select("vec_id", F.array_min(choices).alias("best")).select(
+    choices = F.expr(_dist2_choices("qa", cents))
+    return _quantized(new_emb, scale).select(
+        "vec_id", F.array_min(choices).alias("best")
+    ).select(
         "vec_id", F.col("best.cluster").alias("cluster")
     )
 
@@ -1486,12 +1415,9 @@ def ivf_pq_adc_topk(emb: DataFrame, k_cells: int = 8, cell_iters: int = 3,
     and broadcast into the candidate joins. Bit-deterministic end to end —
     the DuckDB oracle (ivf_pq_adc_oracle) reproduces cells, codes, probe
     ranking, LUTs and the final ranking exactly."""
-    # fused coarse + m subspace trainings (r08, §1.2): one init collect,
-    # one centroid-update job per round, and ONE projection carrying the
-    # coarse cell AND all m codes — the per-subspace kmeans_quantized
-    # calls (m+1 init collects + a job per task per round) and the m-way
-    # codes join on vec_id are gone. Bit-identical per task (slices of
-    # the same quantized vectors; test-pinned), oracle unchanged.
+    # coarse + m subspace trainings as ONE fused k-means: one init
+    # collect, one centroid-update job per round, and ONE projection
+    # carrying the coarse cell AND all m codes
     dsub = n_dims // m
     fused, all_books = kmeans_multi_quantized(
         emb,
@@ -1504,26 +1430,8 @@ def ivf_pq_adc_topk(emb: DataFrame, k_cells: int = 8, cell_iters: int = 3,
     assign = fused.select("vec_id", "cluster",
                           *[f"code_{s}" for s in range(m)])
 
-    q = _quantized(emb, scale)
-    queries = q.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"), F.col("qa").alias("qqa")
-    )
-    probe_choices = F.expr(
-        "array("
-        + ", ".join(
-            "named_struct('d2', aggregate(zip_with(qqa, "
-            f"array({', '.join(f'{v}L' for v in cvec)}), "
-            "(a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), "
-            f"(acc, x) -> acc + x), 'cluster', {cid})"
-            for cid, cvec in ccents
-        )
-        + ")"
-    )
-    probes = queries.select(
-        "q_id", "qqa",
-        F.explode(F.slice(F.array_sort(probe_choices), 1, n_probe))
-        .alias("p"),
-    ).select("q_id", "qqa", F.col("p.cluster").alias("cluster"))
+    queries, probes = _ivf_probes(_quantized(emb, scale), ccents,
+                                  n_queries, n_probe)
     cand = (
         probes.select("q_id", "cluster")
         .join(assign, "cluster")
@@ -1534,22 +1442,11 @@ def ivf_pq_adc_topk(emb: DataFrame, k_cells: int = 8, cell_iters: int = 3,
     # into the candidate stream on (q_id, code)
     scored = cand
     for s, cents in enumerate(books):
-        entries = F.explode(F.expr(
-            "array("
-            + ", ".join(
-                f"named_struct('code', {cid}, 'd2', "
-                "aggregate(zip_with("
-                f"slice(qqa, {s * dsub + 1}, {dsub}), "
-                f"array({', '.join(f'{v}L' for v in cvec)}), "
-                "(a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), "
-                "(acc, x) -> acc + x))"
-                for cid, cvec in cents
-            )
-            + ")"
-        ))
+        entries = F.explode(F.expr(_dist2_choices(
+            f"slice(qqa, {s * dsub + 1}, {dsub})", cents)))
         lut = queries.select("q_id", entries.alias("e")).select(
-            "q_id", F.col("e.code").alias(f"code_{s}"),
-            F.col("e.d2").alias(f"d2_{s}"),
+            "q_id", F.col("e.cluster").alias(f"code_{s}"),
+            F.col("e.dist2").alias(f"d2_{s}"),
         )
         scored = scored.join(F.broadcast(lut), ["q_id", f"code_{s}"])
     ad2 = sum(F.col(f"d2_{s}") for s in range(1, m)) + F.col("d2_0")
@@ -1700,16 +1597,6 @@ SELECT vec_id, [{arr}] AS proj FROM s ORDER BY vec_id
 # kmeans_quantized recipe) so a DuckDB oracle reproduces every pick.
 # ---------------------------------------------------------------------------
 
-def _dist2_to_literal(vec: list) -> str:
-    """Rendered-SQL exact integer squared distance from column `qa` to a
-    literal center vector (one string parse, not k*dim py4j calls — see
-    kmeans_quantized)."""
-    lits = ", ".join(f"{v}L" for v in vec)
-    return (f"aggregate(zip_with(qa, array({lits}), "
-            "(a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), "
-            "(acc, x) -> acc + x)")
-
-
 def kcenter_select(emb: DataFrame, k: int = 5,
                    scale: int = 1_000_000) -> DataFrame:
     """Greedy k-center: seed = smallest vec_id; each round picks the vector
@@ -1730,11 +1617,7 @@ def kcenter_select(emb: DataFrame, k: int = 5,
     aggregate. No shuffle ever carries vectors."""
     from impalatogo_spark.session import tracked_persist
 
-    q = tracked_persist(emb.select(
-        "vec_id",
-        F.expr(f"transform(embedding, v -> CAST(floor(v * {scale}) AS BIGINT))")
-        .alias("qa"),
-    ))
+    q = tracked_persist(_quantized(emb, scale))
     seed = q.orderBy("vec_id").limit(1).collect()[0]
     centers: list[tuple[int, int, list, int]] = [
         (0, seed.vec_id, list(seed.qa), 0)
@@ -1742,7 +1625,7 @@ def kcenter_select(emb: DataFrame, k: int = 5,
     for r in range(1, k):
         mind = F.expr(
             "array_min(array("
-            + ", ".join(_dist2_to_literal(c[2]) for c in centers)
+            + ", ".join(_dist2_sql("qa", c[2]) for c in centers)
             + "))"
         )
         far = (
@@ -1753,17 +1636,11 @@ def kcenter_select(emb: DataFrame, k: int = 5,
         )
         centers.append((r, far.vec_id, list(far.qa), far.d2))
     # coverage: nearest center per vector, ties to the lower rank
-    choices = F.expr(
-        "array_min(array("
-        + ", ".join(
-            f"named_struct('d2', {_dist2_to_literal(vec)}, 'rnk', {rnk})"
-            for rnk, _, vec, _ in centers
-        )
-        + "))"
-    )
+    choices = F.array_min(F.expr(_dist2_choices(
+        "qa", [(rnk, vec) for rnk, _, vec, _ in centers])))
     cov = (
         q.select(choices.alias("best"))
-        .groupBy(F.col("best.rnk").alias("rnk"))
+        .groupBy(F.col("best.cluster").alias("rnk"))
         .agg(F.count(F.lit(1)).alias("n_covered"))
     )
     sel = emb.sparkSession.createDataFrame(

@@ -714,9 +714,9 @@ def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN top-5 (k-means coarse quantizer, 4-probe): the second scale
-    path for similarity search next to LSH (SURVEY §8). Deterministic given
-    the fixed k-means seed; recall >= 0.5 vs brute force asserted in
-    tests/test_similarity.py."""
+    path for similarity search next to LSH (SURVEY §8). Deterministic: the
+    cells come from the engine's integer k-means; recall >= 0.9 vs brute
+    force asserted in tests/test_similarity.py."""
     from impalatogo_spark.operators.similarity import ivf_ann_topk, ivf_index
 
     e = S.with_double_embedding(_t(spark, sf_dir, "embeddings"))

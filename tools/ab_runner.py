@@ -34,9 +34,12 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
     spark = get_spark("ab-runner")
-    # warmup outside measurement (bench parity)
-    registry[args.names[0]].spark_fn(spark, args.sf_dir).collect()
-    release_persisted()
+    # warm every named query once outside measurement (bench parity): a
+    # query's first run pays its own one-off costs (schema inference,
+    # codegen, python worker start-up), not only the first name's
+    for n in args.names:
+        registry[n].spark_fn(spark, args.sf_dir).collect()
+        release_persisted()
     out: dict[str, list[float]] = {n: [] for n in args.names}
     for _ in range(args.runs):
         for n in args.names:
