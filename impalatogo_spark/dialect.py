@@ -10,8 +10,9 @@ Handled rewrites (reference citations):
   * DIV integer-division operator -> Spark DIV exists; kept (no-op listed
     for documentation)
   * function-name shims (functions.registry.IMPALA_SQL_FUNCTION_REWRITES)
-  * `INVALIDATE METADATA [tbl]` / `REFRESH tbl`
-    (sql-parser.y:581-589) -> REFRESH TABLE
+  * `INVALIDATE METADATA tbl` / `REFRESH tbl`
+    (sql-parser.y:581-589) -> REFRESH TABLE; bare `INVALIDATE METADATA`
+    is a catalog operation (engine.Engine.invalidate_metadata)
   * `COMPUTE STATS tbl` (sql-parser.y:1249) -> ANALYZE TABLE ... COMPUTE
     STATISTICS FOR ALL COLUMNS
 
@@ -224,13 +225,13 @@ def _rewrite_functions(chunk: str) -> str:
 def translate(sql: str) -> str:
     """Impala SQL -> Spark SQL."""
     text = sql.strip().rstrip(";")
-    upper = text.upper()
 
     # statement-level translations -------------------------------------------
-    m = re.match(r"INVALIDATE\s+METADATA\s*(\S*)", upper)
+    # bare INVALIDATE METADATA is a catalog operation, not a statement:
+    # Engine.invalidate_metadata
+    m = re.match(r"INVALIDATE\s+METADATA\s+(\S+)", text, re.IGNORECASE)
     if m:
-        tbl = text.split()[-1] if m.group(1) else None
-        return f"REFRESH TABLE {tbl}" if tbl else "RESET"
+        return f"REFRESH TABLE {m.group(1)}"
     m = re.match(r"REFRESH\s+(?!TABLE\b)(\S+)\s*$", text, re.IGNORECASE)
     if m:
         return f"REFRESH TABLE {m.group(1)}"

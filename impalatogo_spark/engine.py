@@ -23,7 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from impalatogo_spark.dialect import translate
-from impalatogo_spark.session import ensure_session_confs
+from impalatogo_spark.session import (ensure_session_confs,
+                                      invalidate_metadata, read_parquet,
+                                      rebind_shared_tables)
 
 
 # Impala query option -> handler. The COMPLETE switch from
@@ -83,7 +85,10 @@ class Engine:
         from impalatogo_spark import authz as _authz
 
         self.authz = _authz.AuthzCatalog()
-        self.authz_user: str = spark.sql("SELECT current_user()").first()[0]
+        # what current_user() folds to, read without running a Spark job
+        # (a `SELECT current_user()` collect cost ~0.1 s per server session)
+        self.authz_user: str = spark._jvm.org.apache.spark.sql.catalyst \
+            .CurrentUserContext.getCurrentUser()  # noqa: SLF001
         self.enforce_authz = False
         # external data-source catalog (sql-parser.y create_data_src_stmt;
         # CLASS holds a Python DataSource class path instead of a Java jar
@@ -151,6 +156,10 @@ class Engine:
             r"([\w.`]+)\s+LIKE\s+PARQUET\s+'([^']+)'"
             r"(?:\s+STORED\s+AS\s+(\w+))?(?:\s+LOCATION\s+'([^']+)')?\s*;?\s*$",
             re.IGNORECASE),
+        # bare INVALIDATE METADATA (sql-parser.y:581); the one-table form
+        # is dialect.translate's REFRESH TABLE
+        "invalidate_all": re.compile(
+            r"\s*INVALIDATE\s+METADATA\s*;?\s*$", re.IGNORECASE),
         # DROP [INCREMENTAL] STATS t [PARTITION(...)] (sql-parser.y:1258)
         "drop_stats": re.compile(
             r"\s*DROP\s+(?:INCREMENTAL\s+)?STATS\s+([\w.`]+)"
@@ -184,6 +193,9 @@ class Engine:
                 m.group(2), m.group(3), file_format=(m.group(4) or "PARQUET"),
                 location=m.group(5), if_not_exists=bool(m.group(1)))
             return ok()
+        if self._DDL_RE["invalidate_all"].match(text):
+            self.invalidate_metadata()
+            return ok()
         if m := self._DDL_RE["drop_stats"].match(text):
             self.drop_stats(m.group(1))
             return ok()
@@ -210,8 +222,9 @@ class Engine:
         """CREATE TABLE ... LIKE PARQUET '<file>': infer the column list from
         a parquet file's footer schema (CreateTableLikeFileStmt.java — the
         reference reads the footer with its own parquet parser; Spark's
-        reader does the same footer walk)."""
-        schema = self.spark.read.parquet(schema_file).schema
+        reader does the same footer walk, once per file version:
+        session.read_parquet caches it)."""
+        schema = read_parquet(self.spark, schema_file).schema
         cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
                          for f in schema.fields)
         ine = "IF NOT EXISTS " if if_not_exists else ""
@@ -342,6 +355,8 @@ class Engine:
                 self._restore_conf(conf)
             else:
                 self.spark.conf.set(conf, str(value))
+        if key == "MAX_SCAN_RANGE_LENGTH":
+            rebind_shared_tables(self.spark)
 
     def _restore_conf(self, conf: str) -> None:
         saved = self._conf_saved.get(conf)
@@ -359,6 +374,8 @@ class Engine:
         conf = _SPARK_CONF_OPTIONS.get(key)
         if conf and conf in self._conf_saved:
             self._restore_conf(conf)
+        if key == "MAX_SCAN_RANGE_LENGTH":
+            rebind_shared_tables(self.spark)
 
     def default_configuration(self) -> list[tuple[str, str, str]]:
         """The engine's query-option table as (key, value, description)
@@ -526,6 +543,23 @@ class Engine:
     def refresh(self, table: str) -> None:
         """INVALIDATE METADATA / REFRESH -> REFRESH TABLE."""
         self.spark.sql(f"REFRESH TABLE {table}")
+
+    def invalidate_metadata(self) -> None:
+        """Bare INVALIDATE METADATA, a catalog operation as in the reference
+        (catalogd ResetCatalog): drop the process's cached parquet schemas
+        and catalog sessions, then REFRESH every table and view this session
+        can see. No conf changes — Spark's RESET would also drop the
+        session's SET options and engine confs (partitionOverwriteMode back
+        to static, so a later INSERT OVERWRITE ... PARTITION would wipe
+        every partition)."""
+        invalidate_metadata()
+        for t in self.spark.catalog.listTables():
+            name = t.name if t.isTemporary or not t.namespace else \
+                ".".join([*t.namespace, t.name])
+            try:
+                self.spark.catalog.refreshTable(name)
+            except Exception:
+                pass  # e.g. a table whose files are gone; REFRESH it alone
 
     # -- NESTED PATH JSON (ImpalaToGo's hierarchical-data feature) ----------
 

@@ -107,8 +107,10 @@ def executed_metrics(df: DataFrame) -> list[tuple[int, str, dict]]:
         it = node.metrics().iterator()
         while it.hasNext():
             kv = it.next()
-            vals[str(kv._2().name().get()) if kv._2().name().isDefined()
-                 else str(kv._1())] = kv._2().value()
+            metric = kv._2()  # each py4j call is a round trip
+            label = metric.name()
+            vals[str(label.get()) if label.isDefined()
+                 else str(kv._1())] = metric.value()
         out.append((depth, str(name), vals))
         # InputAdapter / QueryStage wrappers keep real children one level down
         ch = node.children()
@@ -149,11 +151,12 @@ def scan_input_bytes(df: DataFrame) -> int:
                if name.startswith("Scan"))
 
 
-def profile_text(df: DataFrame) -> str:
-    """Render executed_metrics as the indented profile tree the shell's
-    `profile` command prints."""
+def profile_text(metrics_rows) -> str:
+    """Render executed_metrics rows as the indented profile tree the shell's
+    `profile` command prints (the caller walks the plan once and keeps the
+    rows for the exec summary too)."""
     lines = []
-    for depth, name, vals in executed_metrics(df):
+    for depth, name, vals in metrics_rows:
         shown = ", ".join(f"{k}: {v:,}" for k, v in sorted(vals.items())
                           if isinstance(v, int))
         lines.append("  " * depth + f"{name}" + (f"  [{shown}]" if shown else ""))

@@ -12,11 +12,13 @@ Spark-native mapping (no Thrift dependency in this container — the wire
 format is newline-delimited JSON, one request/response object per line,
 deliberately mirroring HS2's RPC surface):
 
-  open_session   -> OpenSession: allocates a session backed by
-                    `spark.newSession()` — an isolated SparkSession sharing
-                    the SparkContext but with its OWN SQL conf, temp views
-                    and UDFs, which is exactly HS2's per-session contract —
-                    plus an Engine for dialect SQL / SET options.
+  open_session   -> OpenSession: allocates a session backed by a clone of
+                    the catalog session (session.clone_catalog_session: the
+                    sf_dir's tables resolved once per process) — an
+                    isolated SparkSession sharing the SparkContext but with
+                    its OWN SQL conf, temp views and UDFs, which is exactly
+                    HS2's per-session contract — plus an Engine for
+                    dialect SQL / SET options.
   execute        -> ExecuteStatement (+ first FetchResults batch inline):
                     runs Impala-dialect SQL, returns an operation handle,
                     column names/types, and up to `fetch` rows.
@@ -62,7 +64,7 @@ from pyspark.sql import SparkSession
 from .admission import (AdmissionController, AdmissionRejected,
                         AdmissionTimeout)
 from .engine import Engine
-from .session import ensure_session_confs, register_tables
+from .session import clone_catalog_session
 
 # SET keys consumed by the admission layer (pool config), applied to the
 # session's current REQUEST_POOL.
@@ -362,9 +364,11 @@ class _StreamingOperation:
             # gate on `fetchable` (window full or EOS), not first-rows: a
             # result that fits the window is never handed out before its
             # completion bookkeeping (slot release, profile, total count)
-            # settles — the historical eager semantics clients rely on
+            # settles — the historical eager semantics clients rely on.
+            # A cancelled stream serves no more buffered rows: wait for
+            # the drainer to settle it as CANCELED.
             while not self.done.is_set() and (
-                    not self.fetchable.is_set()
+                    self.abort.is_set() or not self.fetchable.is_set()
                     or (not self._buf and not self.eos)):
                 self._cond.wait(timeout=0.2)
                 self._last_fetch = _time.monotonic()
@@ -582,11 +586,9 @@ class _Session:
     def __init__(self, spark: SparkSession, sf_dir: str | None):
         import time as _time
 
-        self.spark = spark.newSession()
-        ensure_session_confs(self.spark)
-        if sf_dir:
-            register_tables(self.spark, sf_dir)
-        self.engine = Engine(self.spark)
+        self.spark = (clone_catalog_session(spark, sf_dir) if sf_dir
+                      else spark.newSession())
+        self.engine = Engine(self.spark)  # pins the engine's session confs
         self.operations: dict[str, object] = {}
         self.last_handle: str | None = None
         self.last_used = _time.monotonic()
@@ -1152,7 +1154,7 @@ class I2SServer:
                 tree = executed_metrics(df)
                 profile = (
                     f"Query: {rec['sql']}\nRows: {op.push_count}\n"
-                    f"Elapsed: {elapsed:.3f}s\n" + profile_text(df)
+                    f"Elapsed: {elapsed:.3f}s\n" + profile_text(tree)
                 )
                 import re as _re
 

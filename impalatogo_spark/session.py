@@ -16,11 +16,32 @@ local[32]):
   * Parquet scans rely on DataSource V2 predicate pushdown + column pruning —
     the Spark-native equivalent of the reference's HdfsScanNode conjunct
     evaluation (`be/src/exec/hdfs-scan-node.cc`).
+
+Table metadata is process state, like the reference's catalogd cache
+(`fe/.../catalog/CatalogServiceCatalog.java`), not per-request work:
+  * `read_parquet` (under `table()`) caches each file's inferred schema in
+    `_SCHEMAS`, keyed on the absolute path, the file's signature
+    (`(st_mtime_ns, st_size)`, or for a directory the sorted recursive
+    `(relpath, st_mtime_ns, st_size)` listing) and the parquet confs that
+    change the inferred types (`SCHEMA_CONFS`). A rewritten file or a
+    flipped conf is a miss, so nothing has to invalidate it; the read then
+    passes the schema to Spark and fires no inference job.
+  * `catalog_session` keeps one session per (SparkContext, sf_dir) with the
+    tables registered, rebuilt when a table file's signature changes;
+    `clone_catalog_session` hands each server session a clone of it (the
+    views, conf and functions copied; later changes private to the clone).
+    A shared view's file relation reads its scan confs from the catalog
+    session, so `rebind_shared_tables` gives a clone that sets one
+    (MAX_SCAN_RANGE_LENGTH) its own relations.
+  * `invalidate_metadata` drops both caches (bare INVALIDATE METADATA).
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
+import weakref
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -259,9 +280,139 @@ def scoped_persists():
                 pass  # session already stopped
 
 
+# Parquet confs that change the schema Spark infers for a file:
+# nanosAsLong turns TIMESTAMP(NANOS) into a long (events.ts),
+# inferTimestampNTZ picks NTZ over LTZ, binaryAsString / int96AsTimestamp
+# retype legacy columns, mergeSchema unions the part files' schemas.
+SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (abspath, schema-conf values) -> (file signature, inferred StructType)
+_SCHEMAS: dict[tuple, tuple] = {}
+# (applicationId, abs sf_dir) -> (table-file signatures, catalog session)
+_CATALOGS: dict[tuple, tuple] = {}
+_CATALOG_LOCK = threading.Lock()
+
+
+def _file_signature(path: str) -> tuple:
+    """(st_mtime_ns, st_size) of a file; for a directory the sorted
+    recursive ((relpath, st_mtime_ns, st_size), ...) listing. Raises
+    OSError when the path does not exist."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_mtime_ns, st.st_size)
+    out = []
+    for dirpath, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(dirpath, f)
+            fst = os.stat(full)
+            out.append((os.path.relpath(full, path), fst.st_mtime_ns,
+                        fst.st_size))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet(path) without the schema-inference job after the
+    first read: the inferred schema is cached per (path, file signature,
+    SCHEMA_CONFS values) and handed to the reader. A path that cannot be
+    stat'ed (missing, or not on the local file system) is read bare."""
+    try:
+        sig = _file_signature(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path),
+           tuple(spark.conf.get(c, None) for c in SCHEMA_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    # no lock around the inference job: threads that miss together each
+    # infer, and store the same entry
+    _SCHEMAS[key] = (sig, df.schema)
+    return df
+
+
+def _tables_signature(sf_dir: str) -> tuple:
+    sig = []
+    for t in TABLES:
+        try:
+            sig.append(_file_signature(os.path.join(sf_dir, f"{t}.parquet")))
+        except OSError:
+            sig.append(None)
+    return tuple(sig)
+
+
+def catalog_session(spark: SparkSession, sf_dir: str) -> SparkSession:
+    """The process's one session with `sf_dir`'s tables registered, per
+    SparkContext: built once (newSession + ensure_session_confs +
+    register_tables) and rebuilt when a table file's signature changes.
+    Nothing else holds it, so its conf and views stay as built."""
+    sf_dir = os.path.abspath(sf_dir)
+    key = (spark.sparkContext.applicationId, sf_dir)
+    with _CATALOG_LOCK:
+        sig = _tables_signature(sf_dir)
+        hit = _CATALOGS.get(key)
+        if hit is not None and hit[0] == sig:
+            return hit[1]
+        cat = spark.newSession()
+        ensure_session_confs(cat)
+        register_tables(cat, sf_dir)
+        _CATALOGS[key] = (sig, cat)
+        return cat
+
+
+def clone_catalog_session(spark: SparkSession, sf_dir: str) -> SparkSession:
+    """A new session that starts as a clone of `sf_dir`'s catalog session:
+    Spark's cloneSession copies its temp views (the analyzed plans), SQL
+    conf and function registry; later changes stay private to the clone."""
+    cat = catalog_session(spark, sf_dir)
+    clone = cat.__class__(cat.sparkContext,
+                          cat._jsparkSession.cloneSession())  # noqa: SLF001
+    _CLONED_FROM[clone] = (cat, sf_dir)
+    return clone
+
+
+# clone -> (catalog session, sf_dir), for rebind_shared_tables
+_CLONED_FROM = weakref.WeakKeyDictionary()
+
+
+def rebind_shared_tables(spark: SparkSession) -> None:
+    """Re-register over `spark` each table view it still shares with the
+    catalog session it was cloned from (views it replaced are its own).
+    A shared view's file relation belongs to the catalog session, so file
+    scan confs (split size: MAX_SCAN_RANGE_LENGTH) are read from there;
+    a clone that SETs one needs its own relations, built from the cached
+    schemas without an inference job. No-op for a session that is not a
+    clone."""
+    origin = _CLONED_FROM.get(spark)
+    if origin is None:
+        return
+    cat, sf_dir = origin
+    mine = spark._jsparkSession.sessionState().catalog()  # noqa: SLF001
+    shared = cat._jsparkSession.sessionState().catalog()  # noqa: SLF001
+    for t in TABLES:
+        own = mine.getTempView(t)
+        if own.isDefined() and own.equals(shared.getTempView(t)):
+            table(spark, sf_dir, t).createOrReplaceTempView(t)
+
+
+def invalidate_metadata() -> None:
+    """Drop every cached schema and catalog session (bare INVALIDATE
+    METADATA): the next read infers again, the next clone registers
+    again."""
+    with _CATALOG_LOCK:
+        _SCHEMAS.clear()
+        _CATALOGS.clear()
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # ts encoding depends on the testdata generation: TIMESTAMP(NANOS)
         # arrives as nanos-since-epoch long (nanosAsLong conf above) and is

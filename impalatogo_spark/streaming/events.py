@@ -21,12 +21,13 @@ from pyspark.sql import types as T
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet (schema pinned from a batch read —
-    streaming sources require explicit schemas)."""
-    from impalatogo_spark.session import ensure_session_confs
+    """readStream over the events parquet (schema pinned from the cached
+    batch schema, session.read_parquet — streaming sources require
+    explicit schemas)."""
+    from impalatogo_spark.session import ensure_session_confs, read_parquet
 
     ensure_session_confs(spark)
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     # the streaming file source requires a directory: stream the sf_dir with a
     # glob pinned to the events file
     stream = (

@@ -34,3 +34,28 @@ def duck(sf_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     yield con
     con.close()
+
+
+# The cancel tests' statement: unbounded for any poll window, and its tasks
+# honour Spark's task kill — the codegen'd Range loop checks for
+# interruption on every batch. (A nested-loop join's per-row loop never
+# reaches that check: cancelled cross-join counts kept every core busy for
+# the rest of a suite run.)
+SLOW_SQL = "SELECT count(*) AS c FROM range(0, 9000000000000000000, 1, 4)"
+
+
+@pytest.fixture
+def slow_query(spark):
+    """(SLOW_SQL, stages_end): after a cancel, stages_end() asserts that no
+    Spark stage is still active within 30 s — the cancelled tasks ended
+    instead of outliving their test."""
+    import time
+
+    def stages_end(within_s: float = 30.0) -> None:
+        deadline = time.time() + within_s
+        while spark.sparkContext.statusTracker().getActiveStageIds():
+            assert time.time() < deadline, \
+                f"a cancelled stage is still active {within_s:g}s later"
+            time.sleep(0.05)
+
+    return SLOW_SQL, stages_end

@@ -86,13 +86,14 @@ def test_beeswax_explain_echo_profile(beeswax):
         c.close()
 
 
-def test_beeswax_cancel_mid_flight(beeswax):
+def test_beeswax_cancel_mid_flight(beeswax, slow_query):
     """ImpalaService.Cancel (impala-beeswax-server.cc:434): a slow
-    statement cancels to EXCEPTION state and the connection stays live."""
+    statement cancels to EXCEPTION state, its tasks end, and the
+    connection stays live."""
+    sql, stages_end = slow_query
     c = _client(beeswax)
     try:
-        h = c.query("SELECT count(*) AS c FROM lineitem a, lineitem b, "
-                    "orders o, customer cu")
+        h = c.query(sql)
         deadline = time.time() + 60
         while time.time() < deadline:
             if c.call("get_state", handle=h) == 3:  # RUNNING
@@ -105,6 +106,7 @@ def test_beeswax_cancel_mid_flight(beeswax):
                 break
             time.sleep(0.05)
         assert c.call("get_state", handle=h) == 5
+        stages_end()
         h2 = c.query("SELECT 1 AS one")
         c.wait(h2)
         assert c.fetch_all(h2) == ["1"]

@@ -429,3 +429,70 @@ def test_hybrid_rrf_branches_are_topn(spark, sf_dir):
     plan = plans.simple_plan(retrieval_hybrid_rrf(spark, sf_dir))
     assert plan.count("TakeOrderedAndProject") >= 2, plan
     assert "CartesianProduct" not in plan
+
+
+def _two_walk_metrics(df):
+    """executed_metrics as it was before the single walk: the same tree,
+    with kv._2() and .name() fetched once per use (the form it replaces)."""
+    out = []
+
+    def walk(node, depth):
+        name = node.nodeName()
+        if "AdaptiveSparkPlan" in name:
+            walk(node.executedPlan(), depth)
+            return
+        if name == "CommandResult":
+            try:
+                walk(node.commandPhysicalPlan(), depth)
+                return
+            except Exception:
+                pass
+        vals = {}
+        it = node.metrics().iterator()
+        while it.hasNext():
+            kv = it.next()
+            vals[str(kv._2().name().get()) if kv._2().name().isDefined()
+                 else str(kv._1())] = kv._2().value()
+        out.append((depth, str(name), vals))
+        ch = node.children()
+        for i in range(ch.size()):
+            walk(ch.apply(i), depth + 1)
+        if "QueryStage" in name:
+            walk(node.plan(), depth + 1)
+
+    walk(df._jdf.queryExecution().executedPlan(), 0)  # noqa: SLF001
+    return out
+
+
+def test_single_plan_walk_matches_two_walks(spark, sf_dir, tmp_path):
+    """The server walks the executed plan once per statement and renders
+    the profile, the exec summary and dml_rows from those rows: each is
+    byte-identical to the two-walk form (a walk for the tree, another
+    inside profile_text)."""
+    from types import SimpleNamespace
+
+    from impalatogo_spark.server import exec_summary
+
+    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    df = spark.sql("SELECT o_orderpriority, count(*) AS n, sum(l_quantity) "
+                   "AS q FROM orders JOIN lineitem ON o_orderkey = l_orderkey "
+                   "GROUP BY o_orderpriority")
+    df.collect()
+    spark.sql(f"CREATE TABLE walk_t (k INT) USING parquet "
+              f"LOCATION '{tmp_path / 'walk_t'}'")
+    try:
+        ins = spark.sql("INSERT INTO walk_t SELECT id FROM range(7)")
+        for frame in (df, ins):
+            rows = plans.executed_metrics(frame)
+            old = _two_walk_metrics(frame)
+            assert rows == old
+            assert plans.profile_text(rows) == plans.profile_text(
+                _two_walk_metrics(frame))
+            assert exec_summary(SimpleNamespace(metrics_tree=rows)) == \
+                exec_summary(SimpleNamespace(metrics_tree=old))
+            assert plans.dml_rows_appended(rows) == \
+                plans.dml_rows_appended(old)
+        assert plans.dml_rows_appended(plans.executed_metrics(ins)) == 7
+    finally:
+        spark.sql("DROP TABLE IF EXISTS walk_t")

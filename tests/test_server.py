@@ -78,8 +78,9 @@ def test_session_isolation_set_options(server):
 
 
 def test_session_isolation_temp_views(server):
-    """spark.newSession() per session: temp views created in one session are
-    invisible to another (the HS2 per-session catalog contract)."""
+    """Each session is a clone of the catalog session: temp views created in
+    one session are invisible to another (the HS2 per-session catalog
+    contract)."""
     c1, c2 = _client(server), _client(server)
     try:
         c1.execute("CREATE TEMPORARY VIEW t_srv_iso AS SELECT 1 AS x")
@@ -430,22 +431,20 @@ def test_idle_session_expiry(spark, sf_dir):
         srv.stop()
 
 
-def test_exec_time_limit_cancels_query(server):
+def test_exec_time_limit_cancels_query(server, slow_query):
     """EXEC_TIME_LIMIT_S (query-options.cc exec_time_limit_s): a statement
-    past the wall-clock limit is cancelled via its job group and reports a
-    clean timeout error; the session stays usable and later statements are
-    unaffected by the old limit once unset."""
+    past the wall-clock limit is cancelled via its job group, its tasks
+    end, and it reports a clean timeout error; the session stays usable and
+    later statements are unaffected by the old limit once unset."""
+    sql, stages_end = slow_query
     c = _client(server)
     try:
         c.execute("SET EXEC_TIME_LIMIT_S=1")
-        resp = c.call(
-            op="execute", session=c.session,
-            # unconstrained 4-way product: astronomically larger than 1s
-            sql="SELECT count(*) AS c FROM lineitem a, lineitem b, "
-                "orders o, customer cu",
-        )
+        # unbounded: astronomically longer than 1s
+        resp = c.call(op="execute", session=c.session, sql=sql)
         assert not resp["ok"], "runaway query must be cancelled"
         assert "EXEC_TIME_LIMIT_S" in resp["error"], resp["error"]
+        stages_end()
         # session still healthy; removing the limit restores normal runs
         c.execute("UNSET EXEC_TIME_LIMIT_S")
         assert c.fetch_all(c.execute(
@@ -566,12 +565,14 @@ def test_async_operation_lifecycle(server):
         c.close()
 
 
-def test_async_cancel_releases_pool_slot(server):
+def test_async_cancel_releases_pool_slot(server, slow_query):
     """Client-initiated cancel (impala-hs2-server.cc:915 CancelOperation /
     impala-beeswax-server.cc:434 Cancel): a deliberately slow async
     statement is cancelled mid-flight via its job group, the state lands
-    on CANCELED, fetch refuses, and the admission slot is released."""
+    on CANCELED, its tasks end, fetch refuses, and the admission slot is
+    released."""
     srv, host, port = server
+    sql, stages_end = slow_query
     c = I2SClient(host, port)
     c.open_session()
     try:
@@ -580,10 +581,9 @@ def test_async_cancel_releases_pool_slot(server):
         before = srv.admission.stats("cancel_pool")["cancel_pool"]
         resp = c.call(
             op="execute_async", session=c.session,
-            # unconstrained 4-way product: astronomically larger than the
-            # poll window, so cancel always lands mid-flight
-            sql="SELECT count(*) AS c FROM lineitem a, lineitem b, "
-                "orders o, customer cu",
+            # unbounded: astronomically longer than the poll window, so
+            # cancel always lands mid-flight
+            sql=sql,
         )
         h = resp["handle"]
         # wait until the statement holds the pool slot (RUNNING + admitted)
@@ -605,6 +605,7 @@ def test_async_cancel_releases_pool_slot(server):
             time.sleep(0.05)
         else:
             raise AssertionError("cancel never landed")
+        stages_end()
         # the pool slot must be released so the next statement admits
         deadline = time.time() + 30
         while time.time() < deadline:
@@ -771,6 +772,34 @@ def test_small_result_replay_is_eager_equivalent(spark, sf_dir):
     finally:
         c.close()
         srv.stop()
+
+
+def test_fetch_after_cancel_serves_no_buffered_rows():
+    """Once a stream is cancelled, fetch hands out none of its buffered
+    rows: it waits for the drainer to settle the operation (after the
+    admission slot is released) and then reports the cancel. Before, a
+    fetch racing that settle got rows from a cancelled statement."""
+    from impalatogo_spark.server import _StreamingOperation
+
+    op = _StreamingOperation(["x"], ["int"], window_rows=2)
+    op.push_chunk([[1], [2]], None)  # window full: fetchable
+    op.cancel()
+    out = {}
+
+    def fetch():
+        try:
+            out["rows"] = op.fetch(1)
+        except RuntimeError as e:
+            out["error"] = str(e)
+
+    t = threading.Thread(target=fetch)
+    t.start()
+    t.join(timeout=0.5)
+    assert t.is_alive() and not out, out  # waiting for the drainer
+    op.fail(RuntimeError("operation was cancelled"), cancelled=True)
+    t.join(timeout=10)
+    assert not t.is_alive()
+    assert "cancelled" in out.get("error", ""), out
 
 
 def test_cancel_mid_fetch_releases_admission_slot(spark, sf_dir):

@@ -229,16 +229,15 @@ def test_hs2_sync_error_surfaces_in_execute(hs2):
         c.close()
 
 
-def test_hs2_async_cancel_and_log(hs2):
+def test_hs2_async_cancel_and_log(hs2, slow_query):
     """runAsync ExecuteStatement + GetOperationStatus + CancelOperation +
     GetLog: the full async lifecycle over real thrift frames, including the
     admission slot being freed after cancel."""
     srv, _, _ = hs2
+    sql, stages_end = slow_query
     c = _client(hs2)
     try:
-        op = c.execute(
-            "SELECT count(*) AS c FROM lineitem a, lineitem b, orders o, "
-            "customer cu", run_async=True)
+        op = c.execute(sql, run_async=True)
         deadline = time.time() + 60
         while time.time() < deadline:
             state, _ = c.status(op)
@@ -253,6 +252,7 @@ def test_hs2_async_cancel_and_log(hs2):
                 break
             time.sleep(0.05)
         assert state == "CANCELED"
+        stages_end()
         assert "cancel requested by client" in c.get_log(op)
         # pool healthy afterwards
         deadline = time.time() + 30

@@ -52,7 +52,7 @@ def test_index_and_404(stack):
         _get(base + "/nosuchpage")
 
 
-def test_queries_inflight_and_completed(stack):
+def test_queries_inflight_and_completed(stack, slow_query):
     """The /queries readout shows a RUNNING in-flight query while it
     executes, then moves it to the completed log with rows + elapsed —
     the reference's queries.tmpl contract."""
@@ -61,8 +61,7 @@ def test_queries_inflight_and_completed(stack):
     c.open_session()
     try:
         resp = c.call(op="execute_async", session=c.session,
-                      sql="SELECT count(*) AS c FROM lineitem a, lineitem b, "
-                          "orders o, customer cu",
+                      sql=slow_query[0],
                       label="webui_slow_probe")
         h = resp["handle"]
         seen_inflight = False
@@ -92,6 +91,7 @@ def test_queries_inflight_and_completed(stack):
             time.sleep(0.05)
         else:
             raise AssertionError("query never reached the completed log")
+        slow_query[1]()  # the cancelled tasks ended
 
         # a fast query lands in completed with rows + elapsed
         c.execute("SELECT 1 AS one")

@@ -152,11 +152,11 @@ class Shell:
         df = self.engine.sql(stmt)
         rows = df.collect()
         dt = time.perf_counter() - t0
-        from impalatogo_spark.plans import profile_text
+        from impalatogo_spark.plans import executed_metrics, profile_text
 
         self.last_profile = (
             f"Query: {stmt}\nRows: {len(rows)}\nElapsed: {dt:.3f}s\n"
-            + profile_text(df)
+            + profile_text(executed_metrics(df))
         )
         if self.delimited:
             d = self.output_delimiter
